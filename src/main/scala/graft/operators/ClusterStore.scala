@@ -198,8 +198,7 @@ object ClusterStore {
     require(nBuckets >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new Path(path), true)
+    Generations.fsOf(spark, path).delete(new Path(path), true)
     // one fingerprint evaluation feeds the hub write, the edge join and
     // (via hubs) the CC seed
     val fps = Components.fingerprintRows(docs, idCol, textCol, windows)
@@ -493,7 +492,7 @@ object ClusterStore {
   }
 
   /** Replay-safe apply for STREAM-triggered ingestion
-    * ([[graft.streaming.CcStream]]): foreachBatch delivery is
+    * ([[graft.streaming.StoreStream]]): foreachBatch delivery is
     * at-least-once, and a replayed micro-batch is byte-identical under
     * the stream checkpoint. The manifest flip commits an apply
     * atomically, so a batch is either fully committed (ALL its ids
@@ -563,20 +562,15 @@ object ClusterStore {
     * concurrent with an apply).
     */
   def ccCompact(spark: SparkSession, path: String): Unit =
-      Generations.withWriterLock(spark, path) {
-    Generations.sweepUnreferenced(spark, path, surfaces)
-    val committed = Generations.live(spark, path)
-    if (committed.sizeIs == 1 && committed.head.startsWith("c")) return
-    val (nBuckets, _) = readMeta(spark, path)
-    val cGen = Generations.nextName(spark, path, surfaces, 'c')
-    import spark.implicits._
-    val hubs = Generations.readSurfaceMixed(spark, path, "hubs", committed,
-      hubSchema, "__shard").select(col("w"), col("fp"), col("dst"))
-    // compaction folds the flat apply segments back into the bucket
-    // directories — one file per dir
-    writeGeneration(path, cGen, hubs, ccRead(spark, path),
-      Seq.empty[(Long, Long)].toDF("old_label", "new_label"), nBuckets,
-      segment = false)
-    Generations.commit(spark, path, Seq(cGen))
-  }
+    Generations.compact(spark, path, surfaces) { (cGen, fold) =>
+      val (nBuckets, _) = readMeta(spark, path)
+      import spark.implicits._
+      val hubs = Generations.readSurfaceMixed(spark, path, "hubs", fold,
+        hubSchema, "__shard").select(col("w"), col("fp"), col("dst"))
+      // compaction folds the flat apply segments back into the bucket
+      // directories — one file per dir
+      writeGeneration(path, cGen, hubs, ccRead(spark, path),
+        Seq.empty[(Long, Long)].toDF("old_label", "new_label"), nBuckets,
+        segment = false)
+    }
 }

@@ -434,7 +434,7 @@ object Dedup {
     val docSets = docs.select(col(idCol).as("id"),
       array_distinct(split(col(textCol), "\\s+")).as("tok"))
       .filter(size(col("tok")) > 0)
-      .withColumn("h", md5(concat_ws(" ", array_sort(col("tok")))))
+      .withColumn("h", md5(concat_ws("\u0000", array_sort(col("tok")))))
     // Materialized once: docSets feeds members (read 3×: repOf + intra×2)
     // and reps; reps feeds the prefix chain, BOTH verify-side set lookups,
     // and repOf. Without lineage truncation every consumer replays the

@@ -45,9 +45,6 @@ object DsirStore {
   /** Side tag for the raw-pool sample's counts. */
   val SideRaw = "raw"
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private val surfaces = Seq("counts")
 
   private val countsSchema = new StructType()
@@ -108,7 +105,7 @@ object DsirStore {
       s"nBuckets must be in [2, 65536]: $nBuckets")
     val spark = target.sparkSession
     import spark.implicits._
-    fsOf(spark, dir).delete(new Path(dir), true)
+    Generations.fsOf(spark, dir).delete(new Path(dir), true)
     writeGeneration(Some(target), Some(rawPool), textCol, dir, "g0", nBuckets)
     Seq((nBuckets, StoreVersion)).toDF("n_buckets", "store_version")
       .write.mode("overwrite").parquet(s"$dir/meta")
@@ -121,36 +118,31 @@ object DsirStore {
     * of all ingested batches. `side` is [[SideTarget]] or [[SideRaw]]. */
   def dsirAppend(spark: SparkSession, batch: DataFrame, textCol: String,
       dir: String, side: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    require(side == SideTarget || side == SideRaw,
-      s"dsirAppend: side must be '$SideTarget' or '$SideRaw': $side")
-    val nBuckets = readMeta(spark, dir)
-    val gen = Generations.nextName(spark, dir, surfaces, 'g')
-    writeGeneration(if (side == SideTarget) Some(batch) else None,
-      if (side == SideRaw) Some(batch) else None, textCol, dir, gen, nBuckets)
-    Generations.add(spark, dir, gen)
-  }
+    ingest(spark, batch, textCol, dir, side, None)
 
-  /** Replay-safe append for STREAM-triggered maintenance: the generation
-    * write targets `gen=<gen>` with OVERWRITE, so an at-least-once
-    * redelivery rewrites the same file and converges. `gen` must not
-    * collide with the batch ("g<k>") or compaction ("c<n>") namespaces —
-    * use "b<batchId>". */
+  /** Replay-safe append for STREAM-triggered maintenance
+    * ([[graft.streaming.StoreStream]]): the generation write targets
+    * `gen=<gen>` with OVERWRITE, so an at-least-once redelivery rewrites
+    * the same file and converges. `gen` must not collide with the batch
+    * ("g<k>") or compaction ("c<n>") namespaces — use "b<batchId>". The
+    * streamed side is usually [[SideRaw]] — the side a live crawl keeps
+    * refreshing while the curated target sample stays fixed. */
   def dsirAppendOrReplay(spark: SparkSession, batch: DataFrame,
       textCol: String, dir: String, side: String, gen: String): Unit =
-      Generations.withWriterLock(spark, dir) {
+    ingest(spark, batch, textCol, dir, side, Some(gen))
+
+  /** The one ingest body behind [[dsirAppend]] (auto-named) and
+    * [[dsirAppendOrReplay]] (caller-named) — see [[Generations.ingest]]. */
+  private def ingest(spark: SparkSession, batch: DataFrame, textCol: String,
+      dir: String, side: String, gen: Option[String]): Unit = {
+    val op = if (gen.isEmpty) "dsirAppend" else "dsirAppendOrReplay"
     require(side == SideTarget || side == SideRaw,
-      s"dsirAppendOrReplay: side must be '$SideTarget' or '$SideRaw': $side")
-    require(gen.nonEmpty &&
-      !(gen.length > 1 && (gen.head == 'g' || gen.head == 'c') &&
-        gen.tail.forall(_.isDigit)),
-      s"dsirAppendOrReplay: generation name '$gen' collides with the " +
-        "batch/compaction namespace — use a distinct prefix, e.g. b<batchId>")
-    val nBuckets = readMeta(spark, dir)
-    writeGeneration(if (side == SideTarget) Some(batch) else None,
-      if (side == SideRaw) Some(batch) else None, textCol, dir, gen, nBuckets)
-    if (!Generations.live(spark, dir).contains(gen))
-      Generations.add(spark, dir, gen)
+      s"$op: side must be '$SideTarget' or '$SideRaw': $side")
+    Generations.ingest(spark, dir, surfaces, gen, op) { (name, _) =>
+      writeGeneration(if (side == SideTarget) Some(batch) else None,
+        if (side == SideRaw) Some(batch) else None, textCol, dir, name,
+        readMeta(spark, dir))
+    }
   }
 
   /** DSIR log importance weight of every document in `docs` against the
@@ -220,17 +212,10 @@ object DsirStore {
     * [[Generations]] manifest protocol. */
   def dsirCompact(spark: SparkSession, dir: String,
       keepGens: Set[String] = Set.empty): Unit =
-      Generations.withWriterLock(spark, dir) {
-    Generations.sweepUnreferenced(spark, dir, surfaces, keepGens)
-    val liveGens = Generations.live(spark, dir)
-    val foldGens = liveGens.filterNot(keepGens)
-    if (foldGens.isEmpty ||
-      (foldGens.sizeIs == 1 && foldGens.head.startsWith("c"))) return
-    val cGen = Generations.nextName(spark, dir, surfaces, 'c')
-    Generations.readSurfaceAs(spark, dir, "counts", foldGens, countsSchema)
-      .groupBy(col("side"), col("b")).agg(sum(col("c")).as("c"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/counts/gen=$cGen")
-    Generations.commit(spark, dir, cGen +: liveGens.filter(keepGens))
-  }
+    Generations.compact(spark, dir, surfaces, keepGens) { (cGen, fold) =>
+      Generations.readSurfaceAs(spark, dir, "counts", fold, countsSchema)
+        .groupBy(col("side"), col("b")).agg(sum(col("c")).as("c"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/counts/gen=$cGen")
+    }
 }

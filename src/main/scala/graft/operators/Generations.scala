@@ -3,39 +3,49 @@ package graft.operators
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Generation-manifest plumbing shared by the persisted stores whose
-  * surfaces are laid out as one `gen=<g>` directory per ingested batch
-  * ([[Indexing]], [[VectorStore]], [[LmStore]]).
+/** The store lifecycle: generation-manifest plumbing shared by every
+  * persisted store whose surfaces are laid out as one `gen=<g>` directory
+  * per ingested batch — [[Indexing]], [[VectorStore]], [[LmStore]],
+  * [[SpanStore]], [[DsirStore]], [[ClusterStore]], [[History]] and the
+  * stream states of [[graft.streaming.DedupStream]] and
+  * [[graft.streaming.CrawlStream]].
   *
   * The manifest (`<storeDir>/_MANIFEST`, one generation name per line) is
-  * the store's SINGLE COMMIT POINT — the generation-pointer indirection
-  * that makes the store safe to read while it is maintained:
+  * the store's SINGLE COMMIT POINT, and every mutation goes through one of
+  * two steps defined here, so the lock and the manifest-last ordering live
+  * in this one module:
   *
-  *  - A batch write (build / append / stream replay) writes every
-  *    surface's `gen=<g>` directory FIRST and flips the manifest LAST:
-  *    readers resolve the manifest once per query, so a crashed
-  *    multi-surface write is invisible (its orphan directories are
-  *    referenced by nothing) rather than half-visible. The flip commits
-  *    all surfaces of a generation atomically.
-  *  - Compaction never deletes what the manifest references: it writes
-  *    the folded generation as a NEW `gen=c<n>` directory set, flips the
-  *    manifest to point at it, and leaves the folded directories on disk
-  *    while any RETAINED SNAPSHOT manifest still references them. Every
-  *    commit rotates the outgoing manifest into a bounded history
+  *  - [[ingest]]: writer lock → fence the caller's generation name (or
+  *    auto-name `g<k>` from the disk listing) → the caller's guard and
+  *    surface writes against the live list → manifest `add` LAST. Readers
+  *    resolve the manifest once per query, so a crashed multi-surface
+  *    write is invisible (its orphan directories are referenced by
+  *    nothing) rather than half-visible; the flip commits all surfaces of
+  *    a generation atomically, and re-driving a named generation
+  *    overwrites its own directories and converges.
+  *  - [[compact]]: writer lock → sweep (protecting the caller's keep set)
+  *    → resolve live → the caller's fold set and skip rule → name `c<n>` →
+  *    the caller's write → `commit(c<n> +: unfolded)`. Compaction never
+  *    deletes what the manifest references: the fold lands as a NEW
+  *    directory set, and the folded directories stay on disk while any
+  *    RETAINED SNAPSHOT manifest still references them. Every commit
+  *    rotates the outgoing manifest into a bounded history
   *    (`_MANIFEST.<n>`, [[HistoryKeep]] deep), and the sweep protects
   *    everything the history references — so a reader that resolved an
   *    old manifest keeps a complete, immutable view for `HistoryKeep`
   *    commits (the tunable grace window), and [[liveAt]] resolves a past
   *    store state by name (cheap time travel). Disk overhead is bounded
   *    by compaction cadence × HistoryKeep, never by ingest history.
-  *  - The manifest flip itself is a write-to-temp + overwrite-rename
-  *    ([[FileContext]] `Options.Rename.OVERWRITE` — atomic on HDFS and
-  *    POSIX filesystems), so readers see the old list or the new list,
-  *    never a torn file.
+  *
+  * Builds write their first generation and [[commit]] it directly. The
+  * manifest flip itself is a write-to-temp + overwrite-rename
+  * ([[FileContext]] `Options.Rename.OVERWRITE` — atomic on HDFS and POSIX
+  * filesystems), so readers see the old list or the new list, never a
+  * torn file.
   *
   * WRITERS remain single-writer — and the contract is ENFORCED, not just
-  * documented: every mutating store entry point runs under
-  * [[withWriterLock]] (in-JVM thread arbiter + best-effort create-
+  * documented: both steps (and every other mutating store entry point) run
+  * under [[withWriterLock]] (in-JVM thread arbiter + best-effort create-
   * exclusive lock file), so a second concurrent writer fails fast instead
   * of interleaving `add`/`commit` and silently losing a generation. The
   * manifest removes the concurrent READER hazard and narrows every
@@ -58,7 +68,7 @@ object Generations {
     * can pin a PAST store state by name ([[liveAt]]). */
   val HistoryKeep = 2
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+  private[graft] def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readManifest(fs: FileSystem, p: Path): Seq[String] = {
@@ -248,6 +258,91 @@ object Generations {
     }
   }
 
+  /** The INGEST step every append runs: under the writer lock, fence the
+    * caller's generation name (`Some(gen)`: a replay-safe append that
+    * re-drives the same name on redelivery) or auto-name a fresh `g<k>`
+    * (`None`: an append-only batch), run `write(name, live)` — the
+    * caller's guard and every surface write of that generation, against
+    * the live list — and `add` the name to the manifest LAST. A fresh
+    * name is on no surface's disk listing, so the live list never holds
+    * it: a replay guard's `gen =!= name` filter is then a no-op, and the
+    * append-only and replay paths share one body. `op` names the caller
+    * in the fence's error. */
+  def ingest(spark: SparkSession, storeDir: String, surfaces: Seq[String],
+      gen: Option[String], op: String)(
+      write: (String, Seq[String]) => Unit): Unit =
+      withWriterLock(spark, storeDir) {
+    for (g <- gen)
+      require(g.nonEmpty && !(g.length > 1 && (g.head == 'g' || g.head == 'c')
+          && g.tail.forall(_.isDigit)),
+        s"$op: generation name '$g' collides with the batch/compaction " +
+          "namespace — use a distinct prefix, e.g. b<batchId>")
+    val name = gen.getOrElse(nextName(spark, storeDir, surfaces, 'g'))
+    write(name, live(spark, storeDir))
+    add(spark, storeDir, name)
+  }
+
+  /** The default compaction skip rule: nothing to fold, or a lone
+    * already-compacted generation (repeated compaction is a no-op). */
+  private def foldsNothing(fold: Seq[String]): Boolean =
+    fold.isEmpty || (fold.sizeIs == 1 && fold.head.startsWith("c"))
+
+  /** The COMPACTION step every store runs: under the writer lock, sweep
+    * the generations the previous compaction folded (their reader grace
+    * has lapsed) and crashed writes' orphans — never one in `keep`, the
+    * stream generations whose batches the checkpoint has not committed —
+    * then fold the live generations outside `keep` that `foldable`
+    * accepts, unless `skip` says the fold set is already compact. The
+    * fold is written by `write(cGen, fold)` as a NEW `c<n>` generation
+    * and the manifest flips to `c<n> +: unfolded` — the only commit, so
+    * a crash before it leaves the live store untouched (the partial
+    * `c<n>` is swept as an orphan next time). */
+  def compact(spark: SparkSession, storeDir: String, surfaces: Seq[String],
+      keep: Set[String] = Set.empty, foldable: String => Boolean = _ => true,
+      skip: Seq[String] => Boolean = foldsNothing)(
+      write: (String, Seq[String]) => Unit): Unit =
+      withWriterLock(spark, storeDir) {
+    sweepUnreferenced(spark, storeDir, surfaces, keep)
+    val gens = live(spark, storeDir)
+    val fold = gens.filter(g => !keep(g) && foldable(g))
+    if (!skip(fold)) {
+      val cGen = nextName(spark, storeDir, surfaces, 'c')
+      write(cGen, fold)
+      commit(spark, storeDir, cGen +: gens.filterNot(fold.contains))
+    }
+  }
+
+  /** Write one surface generation (`<storeDir>/<surface>/gen=<gen>`, an
+    * OVERWRITE) in the serving layout: repartitioned by `parts` — one
+    * file per partition value — and sorted within each partition by
+    * `sortBy`; directory-partitioned by `parts` unless `flat` (a batch
+    * append's segment keeps them as data columns, so its file count
+    * tracks the batch). `serve` adds 4 MB row groups and 64 KB pages to
+    * the 2000-row page cap: with ck-sorted files the reader's page column
+    * indexes then skip key ranges a serving batch never touches
+    * ([[graft.functions.Pushdown]]) — dictionary-packed count tables hit
+    * parquet's 20k-row page cap long before 64 KB, so the row cap is the
+    * real skip granularity. */
+  private[operators] def writeSurface(df: DataFrame, storeDir: String,
+      surface: String, gen: String, parts: Seq[String], sortBy: Seq[String],
+      flat: Boolean = false, serve: Boolean = true): Unit = {
+    import org.apache.spark.sql.functions.col
+    val placed =
+      if (parts.isEmpty) df
+      else {
+        val r = df.repartition(parts.map(col): _*)
+        if (sortBy.isEmpty) r else r.sortWithinPartitions(sortBy.map(col): _*)
+      }
+    val capped = placed.write.mode("overwrite")
+      .option("parquet.page.row.count.limit", 2000)
+    val w =
+      if (serve) capped.option("parquet.block.size", 4L << 20)
+        .option("parquet.page.size", 64 << 10)
+      else capped
+    (if (flat) w else w.partitionBy(parts: _*))
+      .parquet(s"$storeDir/$surface/gen=$gen")
+  }
+
   /** Read one surface restricted to the given generations: explicit
     * `gen=` directory paths anchored by `basePath`, so the partition
     * columns (`gen`, and `shard`/`cell` below it) still infer and a
@@ -401,7 +496,7 @@ object Generations {
     * folded. `protect` carries the stream generations whose batches the
     * checkpoint has not committed: a crashed stream write's directories
     * must survive until its replay rewrites them. */
-  def sweepUnreferenced(spark: SparkSession, storeDir: String,
+  private def sweepUnreferenced(spark: SparkSession, storeDir: String,
       surfaces: Seq[String], protect: Set[String] = Set.empty): Unit = {
     val fs = fsOf(spark, storeDir)
     // retained snapshot manifests keep their generations readable: the

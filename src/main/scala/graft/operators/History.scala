@@ -80,8 +80,7 @@ object History {
     require(nBuckets >= 1)
     val spark = events.sparkSession
     import spark.implicits._
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Generations.fsOf(spark, path)
       .delete(new org.apache.hadoop.fs.Path(path), true)
     // repartition(__bucket) before every partitioned write: ONE file per
     // non-empty bucket dir (otherwise each upstream task writes into every
@@ -142,7 +141,7 @@ object History {
   }
 
   /** Replay-safe apply for STREAM-triggered ingestion
-    * ([[graft.streaming.CdcStream]]): foreachBatch delivery is
+    * ([[graft.streaming.StoreStream]]): foreachBatch delivery is
     * at-least-once, and a replayed micro-batch is byte-identical under the
     * stream checkpoint — so "every batch event already stored" means the
     * previous attempt's append committed and at most the (idempotent)
@@ -216,8 +215,7 @@ object History {
   private def readEventsPruned(spark: SparkSession, path: String,
       buckets: Array[Int]): DataFrame = {
     val gens = Generations.live(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = Generations.fsOf(spark, path)
     val paths = for {
       g <- gens
       bk <- buckets
@@ -287,16 +285,11 @@ object History {
     * Single WRITER still required (never concurrent with an apply).
     */
   def scd2Compact(spark: SparkSession, path: String): Unit =
-      Generations.withWriterLock(spark, path) {
-    Generations.sweepUnreferenced(spark, path, surfaces)
-    val committed = Generations.live(spark, path)
-    if (committed.sizeIs == 1 && committed.head.startsWith("c")) return
-    val cGen = Generations.nextName(spark, path, surfaces, 'c')
-    // one shuffle partition per bucket value → one file per bucket dir
-    Generations.readSurface(spark, path, "events", committed).drop("gen")
-      .repartition(col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$path/events/gen=$cGen")
-    Generations.commit(spark, path, Seq(cGen))
-  }
+    Generations.compact(spark, path, surfaces) { (cGen, fold) =>
+      // one shuffle partition per bucket value → one file per bucket dir
+      Generations.readSurface(spark, path, "events", fold).drop("gen")
+        .repartition(col("__bucket"))
+        .write.mode("overwrite").partitionBy("__bucket")
+        .parquet(s"$path/events/gen=$cGen")
+    }
 }

@@ -100,14 +100,12 @@ object Indexing {
   //
   // Generation names: "g<k>" for batch build/append (auto-numbered),
   // caller-chosen (e.g. "b<batchId>", [[graft.streaming.IndexStream]])
-  // for stream appends, "c<n>" for compacted generations. Every
+  // for stream appends, "c<n>" for compacted generations
+  // ([[Generations.ingest]] fences caller names off both). Every
   // generation write is an OVERWRITE of its own gen directory, so
   // re-running a generation (at-least-once stream redelivery, a crashed
   // append re-driven with the same gen) converges to the same bytes —
   // and stays INVISIBLE until the manifest references it.
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readMeta(spark: SparkSession, indexDir: String): (Int, Int) = {
     val m = spark.read.parquet(s"$indexDir/meta")
@@ -180,22 +178,14 @@ object Indexing {
   private def writeGeneration(p: DataFrame, indexDir: String, gen: String,
       headCap: Int, segment: Boolean): Unit = {
     // postings/stats are ck-SORTED inside their files (serve-optimized
-    // layout, 4 MB row groups / 2000-row pages): the serving paths push
+    // layout, [[Generations.writeSurface]]): the serving paths push
     // OR-of-ranges over a query batch's own ck set, so the reader's page
     // column indexes skip token ranges the batch never touches — the
     // in-shard scan bound the LM register established ([[graft.functions
     // .Pushdown]]); heads keep the shard-only sort (whole-vocab serving)
-    def out(df: DataFrame, sub: String, ckSort: Boolean = true): Unit = {
-      val sortCols =
-        if (ckSort) Seq(col("shard"), col("ck")) else Seq(col("shard"))
-      val w = df.repartition(col("shard")).sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite")
-        .option("parquet.block.size", 4L << 20)
-        .option("parquet.page.size", 64 << 10)
-        .option("parquet.page.row.count.limit", 2000)
-      (if (segment) w else w.partitionBy("shard"))
-        .parquet(s"$indexDir/$sub/gen=$gen")
-    }
+    def out(df: DataFrame, sub: String, ckSort: Boolean = true): Unit =
+      Generations.writeSurface(df, indexDir, sub, gen, Seq("shard"),
+        if (ckSort) Seq("shard", "ck") else Seq("shard"), flat = segment)
     out(p.select(col("token"), col("id"), col("tf"), col("dl"), col("ck"),
       col("shard")), "postings")
     out(p.groupBy(col("shard"), col("token"))
@@ -230,7 +220,7 @@ object Indexing {
     require(nShards >= 1 && headCap >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    fsOf(spark, indexDir).delete(new Path(indexDir), true)
+    Generations.fsOf(spark, indexDir).delete(new Path(indexDir), true)
     val p = prepared(docs, idCol, textCol, nShards)
     writeGeneration(p, indexDir, "g0", headCap, segment = false)
     p.unpersist()
@@ -253,23 +243,7 @@ object Indexing {
     */
   def indexAppend(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String): Unit =
-      Generations.withWriterLock(batch.sparkSession, indexDir) {
-    val spark = batch.sparkSession
-    val (nShards, headCap) = readMeta(spark, indexDir)
-    val dupe = surface(spark, indexDir, "doclen",
-        Generations.live(spark, indexDir)).select(col("id"))
-      .join(batch.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
-    require(dupe.isEmpty,
-      "indexAppend: batch contains doc ids already in the index — " +
-        "the append-only contract forbids re-ingesting a document")
-    // name from the DISK listing (orphans of crashed appends block reuse);
-    // visibility from the manifest flip below — all five surfaces at once
-    val gen = Generations.nextName(spark, indexDir, surfaces, 'g')
-    val p = prepared(batch, idCol, textCol, nShards)
-    writeGeneration(p, indexDir, gen, headCap, segment = true)
-    p.unpersist()
-    Generations.add(spark, indexDir, gen)
-  }
+    ingest(batch, idCol, textCol, indexDir, None)
 
   /** Replay-safe append for STREAM-triggered ingestion
     * ([[graft.streaming.IndexStream]]): foreachBatch delivery is
@@ -284,33 +258,35 @@ object Indexing {
     *
     * `gen` must be stable per source batch, unique across batches, and
     * must not collide with the auto-numbered batch generations ("g<k>") or
-    * the compacted generation ("c0") — use "b<batchId>".
+    * the compacted generations ("c<n>") — use "b<batchId>".
     */
   def indexAppendOrReplay(batch: DataFrame, idCol: String, textCol: String,
       indexDir: String, gen: String): Unit =
-      Generations.withWriterLock(batch.sparkSession, indexDir) {
-    require(gen.nonEmpty && !namespaceClash(gen),
-      s"indexAppendOrReplay: generation name '$gen' collides with the " +
-        "batch/compaction namespace — use a distinct prefix, e.g. b<batchId>")
-    val spark = batch.sparkSession
-    val (nShards, headCap) = readMeta(spark, indexDir)
-    val others = surface(spark, indexDir, "doclen",
-        Generations.live(spark, indexDir))
-      .filter(col("gen") =!= gen).select(col("id"))
-      .join(batch.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
-    require(others.isEmpty,
-      "indexAppendOrReplay: batch contains doc ids already ingested by a " +
-        "DIFFERENT generation — genuine re-ingestion, not a replay")
-    val p = prepared(batch, idCol, textCol, nShards)
-    writeGeneration(p, indexDir, gen, headCap, segment = true)
-    p.unpersist()
-    Generations.add(spark, indexDir, gen)
-  }
+    ingest(batch, idCol, textCol, indexDir, Some(gen))
 
-  /** "g<k>" and "c<n>" are reserved for batch appends and compaction. */
-  private def namespaceClash(gen: String): Boolean =
-    gen.length > 1 && (gen.head == 'g' || gen.head == 'c') &&
-      gen.tail.forall(_.isDigit)
+  /** The one ingest body behind [[indexAppend]] (`gen = None`: auto-named,
+    * append-only) and [[indexAppendOrReplay]] (a caller-named, replayable
+    * generation) — see [[Generations.ingest]]. */
+  private def ingest(batch: DataFrame, idCol: String, textCol: String,
+      indexDir: String, gen: Option[String]): Unit = {
+    val spark = batch.sparkSession
+    val op = if (gen.isEmpty) "indexAppend" else "indexAppendOrReplay"
+    Generations.ingest(spark, indexDir, surfaces, gen, op) { (name, live) =>
+      val (nShards, headCap) = readMeta(spark, indexDir)
+      val dupe = surface(spark, indexDir, "doclen", live)
+        .filter(col("gen") =!= name).select(col("id"))
+        .join(batch.select(col(idCol).cast("long").as("id")), Seq("id"),
+          "left_semi")
+      require(dupe.isEmpty,
+        if (gen.isEmpty) "indexAppend: batch contains doc ids already in " +
+          "the index — the append-only contract forbids re-ingesting a document"
+        else "indexAppendOrReplay: batch contains doc ids already ingested " +
+          "by a DIFFERENT generation — genuine re-ingestion, not a replay")
+      val p = prepared(batch, idCol, textCol, nShards)
+      writeGeneration(p, indexDir, name, headCap, segment = true)
+      p.unpersist()
+    }
+  }
 
   /** Serve the [[invertedIndex]] surface from the persisted store: df/ttf
     * fold the per-generation stat segments by sum, and the posting head is
@@ -366,49 +342,23 @@ object Indexing {
     */
   def indexCompact(spark: SparkSession, indexDir: String,
       keepGens: Set[String] = Set.empty): Unit =
-      Generations.withWriterLock(spark, indexDir) {
-    val (_, headCap) = readMeta(spark, indexDir)
-    // sweep generations folded by the PREVIOUS compaction (their reader
-    // grace has lapsed) and orphans of crashed writes — but never a
-    // protected stream generation awaiting its replay
-    Generations.sweepUnreferenced(spark, indexDir, surfaces, keepGens)
-    val liveGens = Generations.live(spark, indexDir)
-    val foldGens = liveGens.filterNot(keepGens)
-    // nothing to fold: no foldable gens, or a lone already-compacted one
-    if (foldGens.isEmpty ||
-      (foldGens.sizeIs == 1 && foldGens.head.startsWith("c"))) return
-    val cGen = Generations.nextName(spark, indexDir, surfaces, 'c')
-    // one shuffle partition per shard value → one file per shard dir
-    def fold(sub: String, parts: Seq[String], ckSort: Boolean = false)
-        (f: DataFrame => DataFrame): Unit = {
-      val folded = f(surface(spark, indexDir, sub, foldGens).drop("gen"))
-      val placed =
-        if (parts.isEmpty) folded
-        else {
-          val r = folded.repartition(parts.map(col): _*)
-          if (ckSort) r.sortWithinPartitions((parts.map(col) :+ col("ck")): _*)
-          else r
-        }
-      placed.write.mode("overwrite")
-        .option("parquet.block.size", 4L << 20)
-        .option("parquet.page.size", 64 << 10)
-        .option("parquet.page.row.count.limit", 2000)
-        .partitionBy(parts: _*).parquet(s"$indexDir/$sub/gen=$cGen")
+    Generations.compact(spark, indexDir, surfaces, keepGens) { (cGen, fold) =>
+      val (_, headCap) = readMeta(spark, indexDir)
+      def in(sub: String) = surface(spark, indexDir, sub, fold).drop("gen")
+      // one shuffle partition per shard value → one file per shard dir
+      val shard = Seq("shard")
+      Generations.writeSurface(in("postings"), indexDir, "postings", cGen,
+        shard, Seq("shard", "ck"))
+      Generations.writeSurface(in("stats").groupBy(col("shard"), col("token"))
+          .agg(sum(col("df")).as("df"), sum(col("ttf")).as("ttf"))
+          .withColumn("ck", graft.functions.Pushdown.ckOf(col("token"))),
+        indexDir, "stats", cGen, shard, Seq("shard", "ck"))
+      Generations.writeSurface(headRows(in("heads"), headCap), indexDir,
+        "heads", cGen, shard, Nil)
+      Generations.writeSurface(in("doclen"), indexDir, "doclen", cGen, Nil, Nil)
+      Generations.writeSurface(in("consts").agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("sum_dl")).as("sum_dl")), indexDir, "consts", cGen, Nil, Nil)
     }
-    fold("postings", Seq("shard"), ckSort = true)(identity)
-    fold("stats", Seq("shard"), ckSort = true) {
-      _.groupBy(col("shard"), col("token"))
-        .agg(sum(col("df")).as("df"), sum(col("ttf")).as("ttf"))
-        .withColumn("ck", graft.functions.Pushdown.ckOf(col("token")))
-    }
-    fold("heads", Seq("shard"))(headRows(_, headCap))
-    fold("doclen", Nil)(identity)
-    fold("consts", Nil) {
-      _.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    }
-    Generations.commit(spark, indexDir,
-      cGen +: liveGens.filter(keepGens)) // the flip — compaction commits here
-  }
 
   /** Point lookup of a (small) token set's postings. The probed shard
     * values are computed driver-side — bounded by nShards by construction

@@ -46,7 +46,8 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   *
   * Generation names: "g<k>" for batch build/append (auto-numbered),
   * caller-chosen "b<batchId>" for stream appends
-  * ([[graft.streaming.LmStream]]), "c<n>" for compacted generations.
+  * ([[graft.streaming.StoreStream]] draining into [[lmAppendOrReplay]]),
+  * "c<n>" for compacted generations.
   * Every generation write OVERWRITES its own gen directory, so
   * re-driving a generation converges — and stays invisible until the
   * manifest references it.
@@ -65,9 +66,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   * path pruning bounds FILES, ck ranges bound BYTES).
   */
 object LmStore {
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def shardOf(w: Column, nShards: Int) =
     pmod(xxhash64(w), lit(nShards.toLong)).cast("int")
@@ -175,24 +173,16 @@ object LmStore {
       textCol: String, dir: String, gen: String, nShards: Int,
       priorGens: Seq[String], segment: Boolean): Unit = {
     val s = batch.sparkSession
-    // every keyed surface is ck-SORTED inside its files and written with
-    // 4 MB row groups / 64 KB pages: the serve-optimized layout — range
+    // every keyed surface is ck-SORTED inside its files and written in the
+    // serve-optimized layout ([[Generations.writeSurface]]): range
     // pushdown on ck then skips at ~page granularity, so a fixed batch's
     // read is bounded by its vocab × 64 KB, not the shard's corpus-grown
     // size. The metadata overhead is a few stats entries per page —
     // noise against the count-table payload.
     def out(df: DataFrame, sub: String, pc: String,
-        sorted: Boolean = true): Unit = {
-      val sortCols = if (sorted) Seq(col(pc), col("ck")) else Seq(col(pc))
-      val w = df.repartition(col(pc)).sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite")
-        .option("parquet.block.size", 4L << 20)
-        .option("parquet.page.size", 64 << 10)
-        // dictionary-packed count tables hit parquet's 20k-row page cap
-        // long before 64 KB — the row cap is the real skip granularity
-        .option("parquet.page.row.count.limit", 2000)
-      (if (segment) w else w.partitionBy(pc)).parquet(s"$dir/$sub/gen=$gen")
-    }
+        sorted: Boolean = true): Unit =
+      Generations.writeSurface(df, dir, sub, gen, Seq(pc),
+        if (sorted) Seq(pc, "ck") else Seq(pc), flat = segment)
     val bg = LanguageModel.bigramRows(batch, idCol, textCol)
       .withColumn("shard", shardOf(col("w1"), nShards))
       .localCheckpoint() // one tokenize+zip evaluation for the two count writes
@@ -248,7 +238,7 @@ object LmStore {
     require(nShards >= 1)
     val spark = trainDocs.sparkSession
     import spark.implicits._
-    fsOf(spark, dir).delete(new Path(dir), true)
+    Generations.fsOf(spark, dir).delete(new Path(dir), true)
     writeGeneration(trainDocs, idCol, textCol, dir, "g0", nShards, Nil,
       segment = false)
     Seq((nShards, graft.functions.Pushdown.LayoutVersion))
@@ -270,62 +260,48 @@ object LmStore {
     */
   def lmAppend(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    val nShards = readMeta(spark, dir)
-    val committed = Generations.live(spark, dir)
-    val ids = batch.select(col(idCol).cast("string").as("id")).distinct()
-      .localCheckpoint()
-    try {
-      val (buckets, cks) = footprint(ids, bucketOf(col("id"), nShards),
-        ckOf(col("id")))
-      val dupe = docregPruned(spark, dir, committed, buckets)
-        .filter(ckFilter(cks)).select(col("id"))
-        .join(ids, Seq("id"), "left_semi")
-      require(dupe.isEmpty,
-        "lmAppend: batch contains doc ids already in the register — " +
-          "the append-only contract forbids re-ingesting a document")
-    } finally ids.unpersist()
-    val gen = Generations.nextName(spark, dir, surfaces, 'g')
-    writeGeneration(batch, idCol, textCol, dir, gen, nShards, committed,
-      segment = true)
-    Generations.add(spark, dir, gen)
-  }
+    ingest(spark, batch, idCol, textCol, dir, None)
 
   /** Replay-safe append for STREAM-triggered ingestion
-    * ([[graft.streaming.LmStream]]): the batch's five surface writes all
+    * ([[graft.streaming.StoreStream]]): the batch's five surface writes all
     * target `gen=<gen>` with OVERWRITE, so an at-least-once redelivery —
     * even after a crash that committed only some of the five — rewrites
     * the same directories and converges; doc ids already ingested by a
     * DIFFERENT generation are genuine re-ingestion and fail fast (guard
     * pruned to the batch ids' buckets). `gen` must not collide with the
-    * batch ("g<k>") or compaction ("c0") namespaces — use "b<batchId>".
+    * batch ("g<k>") or compaction ("c<n>") namespaces — use "b<batchId>".
     */
   def lmAppendOrReplay(spark: SparkSession, batch: DataFrame, idCol: String,
       textCol: String, dir: String, gen: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    require(gen.nonEmpty &&
-      !(gen.length > 1 && (gen.head == 'g' || gen.head == 'c') &&
-        gen.tail.forall(_.isDigit)),
-      s"lmAppendOrReplay: generation name '$gen' collides with the " +
-        "batch/compaction namespace — use a distinct prefix, e.g. b<batchId>")
-    val nShards = readMeta(spark, dir)
-    val committed = Generations.live(spark, dir)
-    val ids = batch.select(col(idCol).cast("string").as("id")).distinct()
-      .localCheckpoint()
-    try {
-      val (buckets, cks) = footprint(ids, bucketOf(col("id"), nShards),
-        ckOf(col("id")))
-      val others = docregPruned(spark, dir, committed, buckets)
-        .filter(ckFilter(cks))
-        .filter(col("gen") =!= gen).select(col("id"))
-        .join(ids, Seq("id"), "left_semi")
-      require(others.isEmpty,
-        "lmAppendOrReplay: batch contains doc ids already ingested by a " +
-          "DIFFERENT generation — genuine re-ingestion, not a replay")
-    } finally ids.unpersist()
-    writeGeneration(batch, idCol, textCol, dir, gen, nShards,
-      committed.filterNot(_ == gen), segment = true)
-    Generations.add(spark, dir, gen)
+    ingest(spark, batch, idCol, textCol, dir, Some(gen))
+
+  /** The one ingest body behind [[lmAppend]] (auto-named) and
+    * [[lmAppendOrReplay]] (caller-named) — see [[Generations.ingest]]. The
+    * novelty check runs against the live generations other than the one
+    * being written, so a replay never finds its own tokens "known". */
+  private def ingest(spark: SparkSession, batch: DataFrame, idCol: String,
+      textCol: String, dir: String, gen: Option[String]): Unit = {
+    val op = if (gen.isEmpty) "lmAppend" else "lmAppendOrReplay"
+    Generations.ingest(spark, dir, surfaces, gen, op) { (name, live) =>
+      val nShards = readMeta(spark, dir)
+      val ids = batch.select(col(idCol).cast("string").as("id")).distinct()
+        .localCheckpoint()
+      try {
+        val (buckets, cks) = footprint(ids, bucketOf(col("id"), nShards),
+          ckOf(col("id")))
+        val dupe = docregPruned(spark, dir, live, buckets)
+          .filter(ckFilter(cks))
+          .filter(col("gen") =!= name).select(col("id"))
+          .join(ids, Seq("id"), "left_semi")
+        require(dupe.isEmpty,
+          if (gen.isEmpty) "lmAppend: batch contains doc ids already in the " +
+            "register — the append-only contract forbids re-ingesting a document"
+          else "lmAppendOrReplay: batch contains doc ids already ingested by " +
+            "a DIFFERENT generation — genuine re-ingestion, not a replay")
+      } finally ids.unpersist()
+      writeGeneration(batch, idCol, textCol, dir, name, nShards,
+        live.filterNot(_ == name), segment = true)
+    }
   }
 
   /** Score a document set against the stored register WITHOUT re-reading
@@ -457,45 +433,24 @@ object LmStore {
     */
   def lmCompact(spark: SparkSession, dir: String,
       keepGens: Set[String] = Set.empty): Unit =
-      Generations.withWriterLock(spark, dir) {
-    Generations.sweepUnreferenced(spark, dir, surfaces, keepGens)
-    val liveGens = Generations.live(spark, dir)
-    val foldGens = liveGens.filterNot(keepGens)
-    // nothing to fold: no foldable gens, or a lone already-compacted one
-    if (foldGens.isEmpty ||
-      (foldGens.sizeIs == 1 && foldGens.head.startsWith("c"))) return
-    val cGen = Generations.nextName(spark, dir, surfaces, 'c')
-    // one shuffle partition per shard value → one file per shard dir;
-    // keyed surfaces re-sort by ck so the compacted files keep the
-    // range-skippable layout the serving scans depend on
-    def fold(sub: String, parts: Seq[String], ckSort: Boolean = false)
-        (f: DataFrame => DataFrame): Unit = {
-      val folded = f(surface(spark, dir, sub, foldGens).drop("gen"))
-      val placed =
-        if (parts.isEmpty) folded
-        else {
-          val p = folded.repartition(parts.map(col): _*)
-          if (ckSort) p.sortWithinPartitions((parts.map(col) :+ col("ck")): _*)
-          else p
-        }
-      placed.write.mode("overwrite")
-        .option("parquet.block.size", 4L << 20)
-        .option("parquet.page.size", 64 << 10)
-        .option("parquet.page.row.count.limit", 2000)
-        .partitionBy(parts: _*).parquet(s"$dir/$sub/gen=$cGen")
+    Generations.compact(spark, dir, surfaces, keepGens) { (cGen, fold) =>
+      def in(sub: String) = surface(spark, dir, sub, fold).drop("gen")
+      // one shuffle partition per shard value → one file per shard dir;
+      // keyed surfaces re-sort by ck so the compacted files keep the
+      // range-skippable layout the serving scans depend on
+      Generations.writeSurface(in("bigrams")
+          .groupBy(col("shard"), col("w1"), col("w2")).agg(sum(col("c")).as("c"))
+          .withColumn("ck", ckOf(col("w1"))),
+        dir, "bigrams", cGen, Seq("shard"), Seq("shard", "ck"))
+      Generations.writeSurface(in("unigrams")
+          .groupBy(col("shard"), col("w1")).agg(sum(col("c")).as("c")),
+        dir, "unigrams", cGen, Seq("shard"), Nil)
+      Generations.writeSurface(in("tokens").distinct(), dir, "tokens", cGen,
+        Seq("shard"), Seq("shard", "ck"))
+      Generations.writeSurface(in("docreg"), dir, "docreg", cGen,
+        Seq("bucket"), Seq("bucket", "ck"))
+      Generations.writeSurface(in("vstat")
+          .groupBy(col("shard")).agg(sum(col("v")).as("v")).coalesce(1),
+        dir, "vstat", cGen, Nil, Nil)
     }
-    fold("bigrams", Seq("shard"), ckSort = true) {
-      _.groupBy(col("shard"), col("w1"), col("w2")).agg(sum(col("c")).as("c"))
-        .withColumn("ck", ckOf(col("w1")))
-    }
-    fold("unigrams", Seq("shard")) {
-      _.groupBy(col("shard"), col("w1")).agg(sum(col("c")).as("c"))
-    }
-    fold("tokens", Seq("shard"), ckSort = true)(_.distinct())
-    fold("docreg", Seq("bucket"), ckSort = true)(identity)
-    fold("vstat", Nil) {
-      _.groupBy(col("shard")).agg(sum(col("v")).as("v")).coalesce(1)
-    }
-    Generations.commit(spark, dir, cGen +: liveGens.filter(keepGens))
-  }
 }

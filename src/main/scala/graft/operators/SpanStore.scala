@@ -34,9 +34,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType
   */
 object SpanStore {
 
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def shardOf(h: Column, nShards: Int) =
     pmod(h, lit(nShards.toLong)).cast("int")
 
@@ -85,30 +82,30 @@ object SpanStore {
     * batch) — the same Lucene segment split as the other stores. */
   private def writeGeneration(wins: DataFrame, ids: DataFrame, dir: String,
       gen: String, nShards: Int, segment: Boolean): Unit = {
-    // ck-sorted files + small pages: probe scans push the batch's ck
-    // ranges so a probed shard is read only around the batch's own hash
-    // ranges (the [[graft.functions.Pushdown]] in-shard scan bound)
-    val counts = wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
-      .withColumn("shard", shardOf(col("h"), nShards))
-      .withColumn("ck", graft.functions.Pushdown.ckOf(col("h")))
-    val w = counts.repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("ck"), col("h"))
-      .write.mode("overwrite")
-      .option("parquet.block.size", 4L << 20)
-      .option("parquet.page.size", 64 << 10)
-      .option("parquet.page.row.count.limit", 2000)
-    (if (segment) w else w.partitionBy("shard"))
-      .parquet(s"$dir/wins/gen=$gen")
-    val reg = ids.select(col("id").cast("string").as("id"))
+    writeWins(wins.groupBy(col("h")).agg(count(lit(1)).as("c"))
+      .withColumn("shard", shardOf(col("h"), nShards)), dir, gen, segment)
+    writeDocreg(ids.select(col("id").cast("string").as("id"))
       .withColumn("bucket", bucketOf(col("id"), nShards))
-      .withColumn("ck", graft.functions.Pushdown.ckOf(col("id")))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("ck"))
-      .write.mode("overwrite")
-      .option("parquet.page.row.count.limit", 2000)
-    (if (segment) reg else reg.partitionBy("bucket"))
-      .parquet(s"$dir/docreg/gen=$gen")
+      .withColumn("ck", graft.functions.Pushdown.ckOf(col("id"))),
+      dir, gen, segment)
   }
+
+  /** (h, c, shard) counts → one `wins` generation: ck-sorted files + small
+    * pages, so probe scans push the batch's ck ranges and a probed shard
+    * is read only around the batch's own hash ranges (the
+    * [[graft.functions.Pushdown]] in-shard scan bound). */
+  private def writeWins(counts: DataFrame, dir: String, gen: String,
+      flat: Boolean): Unit =
+    Generations.writeSurface(
+      counts.withColumn("ck", graft.functions.Pushdown.ckOf(col("h"))),
+      dir, "wins", gen, Seq("shard"), Seq("shard", "ck", "h"), flat)
+
+  /** (id, bucket, ck) rows → one `docreg` generation, ck-sorted with the
+    * page row cap only. */
+  private def writeDocreg(reg: DataFrame, dir: String, gen: String,
+      flat: Boolean): Unit =
+    Generations.writeSurface(reg, dir, "docreg", gen, Seq("bucket"),
+      Seq("bucket", "ck"), flat, serve = false)
 
   /** Build a fresh persisted span store under `dir` (any previous store
     * there is removed): the corpus's window-hash counts, sharded and
@@ -118,7 +115,7 @@ object SpanStore {
     require(windowN >= 2 && nShards >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    fsOf(spark, dir).delete(new Path(dir), true)
+    Generations.fsOf(spark, dir).delete(new Path(dir), true)
     writeGeneration(Dedup.windowRows(docs, idCol, textCol, windowN),
       docs.select(col(idCol).as("id")), dir, "g0", nShards, segment = false)
     Seq((windowN, nShards, graft.functions.Pushdown.LayoutVersion))
@@ -133,27 +130,10 @@ object SpanStore {
     * its window counts and fabricate duplicated spans). */
   def spanStoreAppend(batch: DataFrame, idCol: String, textCol: String,
       dir: String): Unit =
-      Generations.withWriterLock(batch.sparkSession, dir) {
-    val spark = batch.sparkSession
-    val (windowN, nShards) = readMeta(spark, dir)
-    val ids = batch.select(col(idCol).cast("string").as("id"))
-    val (buckets, idCks) = graft.functions.Pushdown.footprint(ids,
-      bucketOf(col("id"), nShards), graft.functions.Pushdown.ckOf(col("id")))
-    val dupe = docregPruned(spark, dir, Generations.live(spark, dir),
-        buckets.toIndexedSeq)
-      .filter(graft.functions.Pushdown.ckFilter(idCks))
-      .join(ids, Seq("id"), "left_semi")
-    require(dupe.isEmpty,
-      "spanStoreAppend: batch contains doc ids already in the store — " +
-        "the append-only contract forbids re-ingesting a document")
-    val gen = Generations.nextName(spark, dir, surfaces, 'g')
-    writeGeneration(Dedup.windowRows(batch, idCol, textCol, windowN),
-      batch.select(col(idCol).as("id")), dir, gen, nShards, segment = true)
-    Generations.add(spark, dir, gen)
-  }
+    ingest(batch.sparkSession, batch, idCol, textCol, dir, None)
 
   /** Replay-safe append for STREAM-triggered ingestion
-    * ([[graft.streaming.SpanStream]]): both surface writes target
+    * ([[graft.streaming.StoreStream]]): both surface writes target
     * `gen=<gen>` with OVERWRITE, so an at-least-once redelivery — even
     * after a crash that committed only one of the two — rewrites the
     * same directories and converges; doc ids already ingested by a
@@ -163,27 +143,33 @@ object SpanStore {
     */
   def spanStoreAppendOrReplay(spark: SparkSession, batch: DataFrame,
       idCol: String, textCol: String, dir: String, gen: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    require(gen.nonEmpty &&
-      !(gen.length > 1 && (gen.head == 'g' || gen.head == 'c') &&
-        gen.tail.forall(_.isDigit)),
-      s"spanStoreAppendOrReplay: generation name '$gen' collides with the " +
-        "batch/compaction namespace — use a distinct prefix, e.g. b<batchId>")
-    val (windowN, nShards) = readMeta(spark, dir)
-    val ids = batch.select(col(idCol).cast("string").as("id"))
-    val (buckets, idCks) = graft.functions.Pushdown.footprint(ids,
-      bucketOf(col("id"), nShards), graft.functions.Pushdown.ckOf(col("id")))
-    val others = docregPruned(spark, dir, Generations.live(spark, dir),
-        buckets.toIndexedSeq)
-      .filter(graft.functions.Pushdown.ckFilter(idCks))
-      .filter(col("gen") =!= gen)
-      .join(ids, Seq("id"), "left_semi")
-    require(others.isEmpty,
-      "spanStoreAppendOrReplay: batch contains doc ids already ingested " +
-        "by a DIFFERENT generation — genuine re-ingestion, not a replay")
-    writeGeneration(Dedup.windowRows(batch, idCol, textCol, windowN),
-      batch.select(col(idCol).as("id")), dir, gen, nShards, segment = true)
-    Generations.add(spark, dir, gen)
+    ingest(spark, batch, idCol, textCol, dir, Some(gen))
+
+  /** The one ingest body behind [[spanStoreAppend]] (auto-named) and
+    * [[spanStoreAppendOrReplay]] (caller-named) — see
+    * [[Generations.ingest]]. */
+  private def ingest(spark: SparkSession, batch: DataFrame, idCol: String,
+      textCol: String, dir: String, gen: Option[String]): Unit = {
+    val op = if (gen.isEmpty) "spanStoreAppend" else "spanStoreAppendOrReplay"
+    Generations.ingest(spark, dir, surfaces, gen, op) { (name, live) =>
+      val (windowN, nShards) = readMeta(spark, dir)
+      val ids = batch.select(col(idCol).cast("string").as("id"))
+      val (buckets, idCks) = graft.functions.Pushdown.footprint(ids,
+        bucketOf(col("id"), nShards), graft.functions.Pushdown.ckOf(col("id")))
+      val dupe = docregPruned(spark, dir, live, buckets.toIndexedSeq)
+        .filter(graft.functions.Pushdown.ckFilter(idCks))
+        .filter(col("gen") =!= name)
+        .join(ids, Seq("id"), "left_semi")
+      require(dupe.isEmpty,
+        if (gen.isEmpty) "spanStoreAppend: batch contains doc ids already " +
+          "in the store — the append-only contract forbids re-ingesting a " +
+          "document"
+        else "spanStoreAppendOrReplay: batch contains doc ids already " +
+          "ingested by a DIFFERENT generation — genuine re-ingestion, not a " +
+          "replay")
+      writeGeneration(Dedup.windowRows(batch, idCol, textCol, windowN),
+        batch.select(col(idCol).as("id")), dir, name, nShards, segment = true)
+    }
   }
 
   /** The batch's duplicated spans against STORE ∪ BATCH, without
@@ -260,32 +246,11 @@ object SpanStore {
     * (readers fold); it bounds generation and file counts. */
   def spanStoreCompact(spark: SparkSession, dir: String,
       keepGens: Set[String] = Set.empty): Unit =
-      Generations.withWriterLock(spark, dir) {
-    Generations.sweepUnreferenced(spark, dir, surfaces, keepGens)
-    val liveGens = Generations.live(spark, dir)
-    val foldGens = liveGens.filterNot(keepGens)
-    if (foldGens.isEmpty ||
-      (foldGens.sizeIs == 1 && foldGens.head.startsWith("c"))) return
-    val cGen = Generations.nextName(spark, dir, surfaces, 'c')
-    winsSurface(spark, dir, foldGens).drop("gen")
-      .groupBy(col("shard"), col("h")).agg(sum(col("c")).as("c"))
-      .withColumn("ck", graft.functions.Pushdown.ckOf(col("h")))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("ck"), col("h"))
-      .write.mode("overwrite")
-      .option("parquet.block.size", 4L << 20)
-      .option("parquet.page.size", 64 << 10)
-      .option("parquet.page.row.count.limit", 2000)
-      .partitionBy("shard")
-      .parquet(s"$dir/wins/gen=$cGen")
-    Generations.readSurfaceMixed(spark, dir, "docreg", foldGens,
-        docregSchema, "bucket").drop("gen")
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("ck"))
-      .write.mode("overwrite")
-      .option("parquet.page.row.count.limit", 2000)
-      .partitionBy("bucket")
-      .parquet(s"$dir/docreg/gen=$cGen")
-    Generations.commit(spark, dir, cGen +: liveGens.filter(keepGens))
-  }
+    Generations.compact(spark, dir, surfaces, keepGens) { (cGen, fold) =>
+      writeWins(winsSurface(spark, dir, fold).drop("gen")
+        .groupBy(col("shard"), col("h")).agg(sum(col("c")).as("c")),
+        dir, cGen, flat = false)
+      writeDocreg(Generations.readSurfaceMixed(spark, dir, "docreg", fold,
+        docregSchema, "bucket").drop("gen"), dir, cGen, flat = false)
+    }
 }

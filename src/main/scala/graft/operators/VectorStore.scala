@@ -27,10 +27,11 @@ import org.apache.spark.sql.functions._
   *       compaction is a pass-through rewrite that bounds the file count
   *
   * Generation names: "g<k>" for batch appends (auto-numbered), caller
-  * chosen "b<batchId>" for stream appends ([[graft.streaming.VectorStream]]),
-  * "c<n>" for compacted generations. Every generation write OVERWRITES
-  * its own gen directory, so re-driving a generation converges — and
-  * stays invisible until the manifest references it.
+  * chosen "b<batchId>" for stream appends ([[graft.streaming.StoreStream]]
+  * draining into [[annAppendOrReplay]]), "c<n>" for compacted
+  * generations. Every generation write OVERWRITES its own gen directory,
+  * so re-driving a generation converges — and stays invisible until the
+  * manifest references it.
   *
   * 100 TB shape: a query batch reads nProbe cells per query — the probed
   * cell set is bounded by nCells BY CONSTRUCTION, so a static IN on the
@@ -40,9 +41,6 @@ import org.apache.spark.sql.functions._
   * slim column, not the vectors).
   */
 object VectorStore {
-
-  private def fsOf(spark: SparkSession, dir: String) =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Stored quantizer, ordered by cell index (= md5 draw rank). */
   private def loadCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
@@ -79,7 +77,7 @@ object VectorStore {
     require(nCells >= 1)
     val spark = corpus.sparkSession
     import spark.implicits._
-    fsOf(spark, dir).delete(new Path(dir), true)
+    Generations.fsOf(spark, dir).delete(new Path(dir), true)
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
     val centroids = Similarity.portableCentroids(c, nCells)
     require(centroids.length == nCells,
@@ -102,41 +100,37 @@ object VectorStore {
     */
   def annAppend(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, dir: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    val dupe = cells(spark, dir, Generations.live(spark, dir)).select(col("id"))
-      .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
-    require(dupe.isEmpty,
-      "annAppend: batch contains vector ids already in the store — " +
-        "the append-only contract forbids re-ingesting a vector")
-    val gen = Generations.nextName(spark, dir, Seq("cells"), 'g')
-    writeGeneration(batch, idCol, vecCol, dir, loadCentroids(spark, dir), gen)
-    Generations.add(spark, dir, gen)
-  }
+    ingest(spark, batch, idCol, vecCol, dir, None)
 
   /** Replay-safe append for STREAM-triggered ingestion
-    * ([[graft.streaming.VectorStream]]): the batch writes its generation
+    * ([[graft.streaming.StoreStream]]): the batch writes its generation
     * under the caller-stable name `gen` with OVERWRITE, so an
     * at-least-once redelivery rewrites the same directory and converges;
     * ids already ingested by a DIFFERENT generation are genuine
     * re-ingestion and fail fast. `gen` must not collide with the batch
-    * ("g<k>") or compaction ("c0") namespaces — use "b<batchId>".
+    * ("g<k>") or compaction ("c<n>") namespaces — use "b<batchId>".
     */
   def annAppendOrReplay(spark: SparkSession, batch: DataFrame, idCol: String,
       vecCol: String, dir: String, gen: String): Unit =
-      Generations.withWriterLock(spark, dir) {
-    require(gen.nonEmpty &&
-      !(gen.length > 1 && (gen.head == 'g' || gen.head == 'c') &&
-        gen.tail.forall(_.isDigit)),
-      s"annAppendOrReplay: generation name '$gen' collides with the " +
-        "batch/compaction namespace — use a distinct prefix, e.g. b<batchId>")
-    val others = cells(spark, dir, Generations.live(spark, dir))
-      .filter(col("gen") =!= gen).select(col("id"))
-      .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
-    require(others.isEmpty,
-      "annAppendOrReplay: batch contains vector ids already ingested by a " +
-        "DIFFERENT generation — genuine re-ingestion, not a replay")
-    writeGeneration(batch, idCol, vecCol, dir, loadCentroids(spark, dir), gen)
-    Generations.add(spark, dir, gen)
+    ingest(spark, batch, idCol, vecCol, dir, Some(gen))
+
+  /** The one ingest body behind [[annAppend]] (auto-named) and
+    * [[annAppendOrReplay]] (caller-named) — see [[Generations.ingest]]. */
+  private def ingest(spark: SparkSession, batch: DataFrame, idCol: String,
+      vecCol: String, dir: String, gen: Option[String]): Unit = {
+    val op = if (gen.isEmpty) "annAppend" else "annAppendOrReplay"
+    Generations.ingest(spark, dir, Seq("cells"), gen, op) { (name, live) =>
+      val dupe = cells(spark, dir, live)
+        .filter(col("gen") =!= name).select(col("id"))
+        .join(batch.select(col(idCol).as("id")), Seq("id"), "left_semi")
+      require(dupe.isEmpty,
+        if (gen.isEmpty) "annAppend: batch contains vector ids already in " +
+          "the store — the append-only contract forbids re-ingesting a vector"
+        else "annAppendOrReplay: batch contains vector ids already ingested " +
+          "by a DIFFERENT generation — genuine re-ingestion, not a replay")
+      writeGeneration(batch, idCol, vecCol, dir, loadCentroids(spark, dir),
+        name)
+    }
   }
 
   /** Serve top-k queries from the store: probe each query's nProbe nearest
@@ -172,7 +166,7 @@ object VectorStore {
     // gens × probed existence checks are driver-side and bounded by
     // generations × (queries × nProbe) — a cell a generation never wrote
     // simply has no directory
-    val fs = fsOf(spark, dir)
+    val fs = Generations.fsOf(spark, dir)
     val paths = for {
       g <- gens
       c <- probed
@@ -229,7 +223,7 @@ object VectorStore {
           (col("p0") + 1).as("probe_rank"), col("pc.cell").as("cell")))
     val probed = q.select(col("cell")).distinct().collect()
       .map(_.getAs[Number](0).intValue())
-    val fs = fsOf(spark, dir)
+    val fs = Generations.fsOf(spark, dir)
     val paths = for {
       g <- gens; c <- probed
       p = s"$dir/cells/gen=$g/cell=$c"
@@ -269,18 +263,10 @@ object VectorStore {
     */
   def annCompact(spark: SparkSession, dir: String,
       keepGens: Set[String] = Set.empty): Unit =
-      Generations.withWriterLock(spark, dir) {
-    Generations.sweepUnreferenced(spark, dir, Seq("cells"), keepGens)
-    val liveGens = Generations.live(spark, dir)
-    val foldGens = liveGens.filterNot(keepGens)
-    // nothing to fold: no foldable gens, or a lone already-compacted one
-    if (foldGens.isEmpty ||
-      (foldGens.sizeIs == 1 && foldGens.head.startsWith("c"))) return
-    val cGen = Generations.nextName(spark, dir, Seq("cells"), 'c')
-    cells(spark, dir, foldGens).drop("gen")
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/cells/gen=$cGen")
-    Generations.commit(spark, dir, cGen +: liveGens.filter(keepGens))
-  }
+    Generations.compact(spark, dir, Seq("cells"), keepGens) { (cGen, fold) =>
+      cells(spark, dir, fold).drop("gen")
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/cells/gen=$cGen")
+    }
 }

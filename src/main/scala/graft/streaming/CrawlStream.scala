@@ -5,7 +5,6 @@ import graft.operators.{Generations, UrlOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming crawl ingest — the front-end stages (WARC walk, URL
   * canonicalization, re-crawl dedup) as a stream maintaining a persisted
@@ -29,34 +28,15 @@ object CrawlStream {
   private val surfaces = Seq("docs", "urls")
 
   /** Drain parquet WARC-blob drops (`file_id`, `payload`) under `srcDir`
-    * into the URL-deduped crawl store at `stateDir`, AvailableNow.
-    * Re-running with the same checkpoint is a no-op.
+    * into the URL-deduped crawl store at `stateDir`, one file per
+    * micro-batch ([[StoreStream]]), AvailableNow. Re-running with the same
+    * checkpoint is a no-op.
     */
   def crawlIngestAvailableNow(spark: SparkSession, srcDir: String,
-      stateDir: String, maxFilesPerTrigger: Int = 1): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, batch, batchId, stateDir)
-      }
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  private def hasManifest(spark: SparkSession, stateDir: String): Boolean =
-    new org.apache.hadoop.fs.Path(stateDir, "_MANIFEST")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(stateDir, "_MANIFEST"))
-
-  private def gensBelow(spark: SparkSession, stateDir: String,
-      b: Long): Seq[String] =
-    Generations.live(spark, stateDir)
-      .filter(g => g.startsWith("c") || g.toLong < b)
+      stateDir: String): Unit =
+    StoreStream.drainAvailableNow(spark, srcDir, stateDir) { (batch, batchId) =>
+      ingestBatch(spark, batch, batchId, stateDir)
+    }
 
   /** One replay-safe micro-batch: parse → canonical key → in-batch
     * keep-first → anti-join against prior keys → one generation commit.
@@ -73,9 +53,7 @@ object CrawlStream {
       .filter(col("_rn") === 1)
       .select(col("doc_id"), col("resource_key"), col("target_uri"),
         col("payload"))
-    val priorGens =
-      if (!hasManifest(spark, stateDir)) Nil
-      else gensBelow(spark, stateDir, batchId)
+    val priorGens = DedupStream.gensBelow(spark, stateDir, batchId)
     val fresh =
       (if (priorGens.isEmpty) inBatch
        else inBatch.join(
@@ -88,9 +66,7 @@ object CrawlStream {
     fresh.write.mode("overwrite").parquet(s"$stateDir/docs/gen=$batchId")
     fresh.select(col("resource_key"))
       .write.mode("overwrite").parquet(s"$stateDir/urls/gen=$batchId")
-    if (!hasManifest(spark, stateDir))
-      Generations.commit(spark, stateDir, Seq(batchId.toString))
-    else Generations.add(spark, stateDir, batchId.toString)
+    DedupStream.commitBatch(spark, stateDir, batchId)
     fresh.unpersist()
     ()
   }
@@ -108,16 +84,6 @@ object CrawlStream {
     * preserved because folds only ever hold watermark-covered batches.
     */
   def compactState(spark: SparkSession, stateDir: String,
-      uptoBatch: Long): Unit = Generations.withWriterLock(spark, stateDir) {
-    require(uptoBatch >= 1, "need uptoBatch >= 1")
-    Generations.sweepUnreferenced(spark, stateDir, surfaces)
-    val live = Generations.live(spark, stateDir)
-    val fold = live.filter(g => g.startsWith("c") || g.toLong < uptoBatch)
-    if (fold.size <= 1) return
-    val cGen = Generations.nextName(spark, stateDir, surfaces, 'c')
-    for (surface <- surfaces)
-      Generations.readSurface(spark, stateDir, surface, fold).drop("gen")
-        .write.mode("overwrite").parquet(s"$stateDir/$surface/gen=$cGen")
-    Generations.commit(spark, stateDir, cGen +: live.filterNot(fold.contains))
-  }
+      uptoBatch: Long): Unit =
+    DedupStream.compactBelow(spark, stateDir, surfaces, uptoBatch)
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{Dedup, Generations}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming corpus dedup: the reference's stream-triggered batch
   * orchestration (kafka_hdfs_consumer.py:334-351 — consume a file, kick a
@@ -38,44 +37,43 @@ object DedupStream {
   private val surfaces = Seq("corpus", "bands")
 
   /** Drain the parquet documents under `srcDir` through incremental dedup
-    * into `stateDir` (`corpus/` survivors + `bands/` signature state),
-    * `maxFilesPerTrigger` files per micro-batch, AvailableNow. Re-running
-    * with the same checkpoint is a no-op (nothing new to ingest). The
+    * into `stateDir` (`corpus/` survivors + `bands/` signature state), one
+    * file per micro-batch ([[StoreStream]]), AvailableNow. Re-running with
+    * the same checkpoint is a no-op (nothing new to ingest). The
     * checkpoint and the state share `stateDir` as one lifecycle unit —
     * batch ids namespace the state generations.
     */
   def dedupIngestAvailableNow(spark: SparkSession, srcDir: String,
       stateDir: String, idCol: String = "doc_id", textCol: String = "text",
       shingleN: Int = 3, threshold: Double = 0.7, k: Int = 32,
-      bands: Int = 16, maxFilesPerTrigger: Int = 1): Unit = {
-    val schema = spark.read.parquet(srcDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(spark, batch, batchId, stateDir, idCol, textCol,
-          shingleN, threshold, k, bands)
-      }
-      .option("checkpointLocation", s"$stateDir/_checkpoint")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      bands: Int = 16): Unit =
+    StoreStream.drainAvailableNow(spark, srcDir, stateDir) { (batch, batchId) =>
+      ingestBatch(spark, batch, batchId, stateDir, idCol, textCol,
+        shingleN, threshold, k, bands)
+    }
 
   private def hasManifest(spark: SparkSession, stateDir: String): Boolean =
-    new org.apache.hadoop.fs.Path(stateDir, "_MANIFEST")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Generations.fsOf(spark, stateDir)
       .exists(new org.apache.hadoop.fs.Path(stateDir, "_MANIFEST"))
 
   /** The committed generations a (possibly replayed) batch `b` may read:
     * numeric generations strictly below `b`, plus compacted folds — which
     * hold only batches below the committed watermark, itself at most any
-    * replayable id. */
-  private def gensBelow(spark: SparkSession, stateDir: String,
+    * replayable id. Empty before the first batch commits. Shared with
+    * [[CrawlStream]], whose state follows the same replay contract. */
+  private[streaming] def gensBelow(spark: SparkSession, stateDir: String,
       b: Long): Seq[String] =
-    Generations.live(spark, stateDir)
+    if (!hasManifest(spark, stateDir)) Nil
+    else Generations.live(spark, stateDir)
       .filter(g => g.startsWith("c") || g.toLong < b)
+
+  /** Commit batch `b`'s generation — one manifest flip for all of its
+    * surfaces; the first batch creates the manifest. */
+  private[streaming] def commitBatch(spark: SparkSession, stateDir: String,
+      b: Long): Unit =
+    if (!hasManifest(spark, stateDir))
+      Generations.commit(spark, stateDir, Seq(b.toString))
+    else Generations.add(spark, stateDir, b.toString)
 
   /** One micro-batch of the ingest, REPLAY-SAFE: the state read excludes
     * generation `batchId` and later, so a batch whose writes landed before
@@ -88,9 +86,7 @@ object DedupStream {
       batchId: Long, stateDir: String, idCol: String, textCol: String,
       shingleN: Int, threshold: Double, k: Int, bands: Int): Unit =
       Generations.withWriterLock(spark, stateDir) {
-    val priorGens =
-      if (!hasManifest(spark, stateDir)) Nil
-      else gensBelow(spark, stateDir, batchId)
+    val priorGens = gensBelow(spark, stateDir, batchId)
     val prior =
       if (priorGens.isEmpty) None
       else {
@@ -116,9 +112,7 @@ object DedupStream {
     Dedup.bandSignatures(survivors, idCol, textCol, shingleN, k, bands)
       .write.mode("overwrite").parquet(s"$stateDir/bands/gen=$batchId")
     // one manifest flip commits survivors + signatures together
-    if (!hasManifest(spark, stateDir))
-      Generations.commit(spark, stateDir, Seq(batchId.toString))
-    else Generations.add(spark, stateDir, batchId.toString)
+    commitBatch(spark, stateDir, batchId)
     survivors.unpersist()
     ()
   }
@@ -150,17 +144,21 @@ object DedupStream {
     * directory from scratch anyway) is swept at the next run. Single
     * writer: never run concurrently with an active ingest.
     */
-  def compactState(spark: SparkSession, stateDir: String, uptoBatch: Long): Unit =
-      Generations.withWriterLock(spark, stateDir) {
+  def compactState(spark: SparkSession, stateDir: String,
+      uptoBatch: Long): Unit =
+    compactBelow(spark, stateDir, surfaces, uptoBatch)
+
+  /** [[compactState]] for any batch-id-named stream state (shared with
+    * [[CrawlStream.compactState]]): one pass-through fold per surface. */
+  private[streaming] def compactBelow(spark: SparkSession, stateDir: String,
+      surfaces: Seq[String], uptoBatch: Long): Unit = {
     require(uptoBatch >= 1, "need uptoBatch >= 1")
-    Generations.sweepUnreferenced(spark, stateDir, surfaces)
-    val live = Generations.live(spark, stateDir)
-    val fold = live.filter(g => g.startsWith("c") || g.toLong < uptoBatch)
-    if (fold.size <= 1) return // nothing to fold
-    val cGen = Generations.nextName(spark, stateDir, surfaces, 'c')
-    for (surface <- surfaces)
-      Generations.readSurface(spark, stateDir, surface, fold).drop("gen")
-        .write.mode("overwrite").parquet(s"$stateDir/$surface/gen=$cGen")
-    Generations.commit(spark, stateDir, cGen +: live.filterNot(fold.contains))
+    Generations.compact(spark, stateDir, surfaces,
+      foldable = g => g.startsWith("c") || g.toLong < uptoBatch,
+      skip = _.sizeIs <= 1) { (cGen, fold) =>
+      for (surface <- surfaces)
+        Generations.readSurface(spark, stateDir, surface, fold).drop("gen")
+          .write.mode("overwrite").parquet(s"$stateDir/$surface/gen=$cGen")
+    }
   }
 }

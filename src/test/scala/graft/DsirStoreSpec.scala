@@ -157,14 +157,20 @@ class DsirStoreSpec extends AnyFunSuite {
       1000000L)
     writeOne(docs.filter(col("doc_id") % 3 === 2), s"$srcDir/f2.parquet",
       2000000L)
-    graft.streaming.DsirStream.dsirIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => DsirStore.dsirAppendOrReplay(spark, b, "text", dir,
+        DsirStore.SideRaw, s"b$id")
+    }
     val got = canon(DsirStore.dsirScore(spark, docs, "doc_id", "text", dir))
     assert(got === canon(Sampling.dsirWeights(docs, target, "doc_id",
       "text", nBuckets = 256, alpha = 1.0)),
       "streamed fit must equal the one-shot recompute")
     assert(Generations.live(spark, dir).toSet === Set("g0", "b0", "b1"))
     // replay with the same checkpoint: nothing new, fit unchanged
-    graft.streaming.DsirStream.dsirIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => DsirStore.dsirAppendOrReplay(spark, b, "text", dir,
+        DsirStore.SideRaw, s"b$id")
+    }
     assert(canon(DsirStore.dsirScore(spark, docs, "doc_id", "text", dir))
       === got)
   }

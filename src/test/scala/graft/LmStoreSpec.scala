@@ -306,13 +306,19 @@ class LmStoreSpec extends AnyFunSuite {
       nShards = 8)
     writeOne(docs.filter($"doc_id" % 3 === 1), s"$srcDir/f1.parquet", 1000000L)
     writeOne(docs.filter($"doc_id" % 3 === 2), s"$srcDir/f2.parquet", 2000000L)
-    graft.streaming.LmStream.lmIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => LmStore.lmAppendOrReplay(spark, b, "doc_id", "text", dir,
+        s"b$id")
+    }
     val got = canon(LmStore.lmScore(spark, docs, "doc_id", "text", dir))
     val want = canon(LanguageModel.bigramLogProb(docs, "doc_id", "text"))
     assert(got === want, "streamed register must equal the batch recompute")
     assert(genDirs(dir, "bigrams").toSet === Set("gen=g0", "gen=b0", "gen=b1"))
     // replay with the same checkpoint: nothing new, register unchanged
-    graft.streaming.LmStream.lmIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => LmStore.lmAppendOrReplay(spark, b, "doc_id", "text", dir,
+        s"b$id")
+    }
     assert(canon(LmStore.lmScore(spark, docs, "doc_id", "text", dir)) === got)
   }
 

@@ -126,6 +126,14 @@ class SpanStoreSpec extends AnyFunSuite {
         "b1")
     }
     assert(e.getMessage.contains("DIFFERENT generation"))
+    // the batch ("g<k>") and compaction ("c<n>") namespaces are fenced off
+    for (reserved <- Seq("g3", "c0")) {
+      val e2 = intercept[IllegalArgumentException] {
+        SpanStore.spanStoreAppendOrReplay(spark, tail, "doc_id", "text", dir,
+          reserved)
+      }
+      assert(e2.getMessage.contains("namespace"))
+    }
   }
 
   test("streaming span ingest maintains the store exactly-once") {
@@ -145,13 +153,19 @@ class SpanStoreSpec extends AnyFunSuite {
       dir, windowN = 8, nShards = 4)
     writeOne(oldDocs.filter($"doc_id" === 3), s"$srcDir/f1.parquet", 1000000L)
     writeOne(oldDocs.filter($"doc_id" === 4), s"$srcDir/f2.parquet", 2000000L)
-    graft.streaming.SpanStream.spanIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => SpanStore.spanStoreAppendOrReplay(spark, b, "doc_id", "text",
+        dir, s"b$id")
+    }
     val got = rows(SpanStore.duplicatedSpansIncremental(spark, batch,
       "doc_id", "text", dir))
     assert(got === fullRestricted(),
       "streamed store must equal the batch recompute")
     // re-running with the same checkpoint is a no-op
-    graft.streaming.SpanStream.spanIngestAvailableNow(spark, srcDir, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, srcDir, dir) {
+      (b, id) => SpanStore.spanStoreAppendOrReplay(spark, b, "doc_id", "text",
+        dir, s"b$id")
+    }
     assert(rows(SpanStore.duplicatedSpansIncremental(spark, batch,
       "doc_id", "text", dir)) === got)
   }

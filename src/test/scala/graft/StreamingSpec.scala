@@ -156,8 +156,10 @@ class StreamingSpec extends AnyFunSuite {
       "event_id", store, nBuckets = 4)
     writeOne(b1, s"$src/f1.parquet", 1000000L)
     writeOne(b2, s"$src/f2.parquet", 2000000L)
-    graft.streaming.CdcStream.scd2IngestAvailableNow(spark, src, store,
-      "user_id", "event_type", "ts", "event_id")
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, store) {
+      (b, _) => graft.operators.History.scd2ApplyOrReplay(spark, store, b,
+        "user_id", "event_type", "ts", "event_id")
+    }
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(col("user_id"), col("version"), col("event_type"),
         unix_millis(col("valid_from")), unix_millis(col("valid_to")),
@@ -168,8 +170,10 @@ class StreamingSpec extends AnyFunSuite {
       "user_id", "event_type", "ts", "event_id"))
     assert(got === want, "streamed store must equal the batch rebuild")
     // replay with the same checkpoint: nothing new, store unchanged
-    graft.streaming.CdcStream.scd2IngestAvailableNow(spark, src, store,
-      "user_id", "event_type", "ts", "event_id")
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, store) {
+      (b, _) => graft.operators.History.scd2ApplyOrReplay(spark, store, b,
+        "user_id", "event_type", "ts", "event_id")
+    }
     assert(canon(graft.operators.History.scd2Read(spark, store)) === got)
   }
 
@@ -190,7 +194,10 @@ class StreamingSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", store)
     writeOne(docs.filter(col("doc_id") % 3 === 1), s"$src/f1.parquet", 1000000L)
     writeOne(docs.filter(col("doc_id") % 3 === 2), s"$src/f2.parquet", 2000000L)
-    graft.streaming.CcStream.ccIngestAvailableNow(spark, src, store)
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, store) {
+      (b, _) => graft.operators.ClusterStore.ccApplyOrReplay(spark, store, b,
+        "doc_id", "text")
+    }
     def canon() = graft.operators.ClusterStore.ccRead(spark, store)
       .select("id", "cluster_id").collect().map(_.toSeq).toSet
     val got = canon()
@@ -200,7 +207,10 @@ class StreamingSpec extends AnyFunSuite {
       .select("id", "cluster_id").collect().map(_.toSeq).toSet
     assert(got === want, "streamed store must equal the batch clustering")
     // replay with the same checkpoint: nothing new, store unchanged
-    graft.streaming.CcStream.ccIngestAvailableNow(spark, src, store)
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, store) {
+      (b, _) => graft.operators.ClusterStore.ccApplyOrReplay(spark, store, b,
+        "doc_id", "text")
+    }
     assert(canon() === got)
   }
 
@@ -258,7 +268,10 @@ class StreamingSpec extends AnyFunSuite {
       nCells = 16)
     writeOne(emb.filter(col("vec_id") % 3 === 1), s"$src/f1.parquet", 1000000L)
     writeOne(emb.filter(col("vec_id") % 3 === 2), s"$src/f2.parquet", 2000000L)
-    graft.streaming.VectorStream.annIngestAvailableNow(spark, src, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, dir) {
+      (b, id) => graft.operators.VectorStore.annAppendOrReplay(spark, b,
+        "vec_id", "embedding", dir, s"b$id")
+    }
     def results() = graft.operators.VectorStore.annSearch(spark,
       emb.filter(col("vec_id") < 5), "vec_id", "embedding", dir,
       k = 10, nProbe = 4).orderBy("query_id", "rank")
@@ -279,7 +292,10 @@ class StreamingSpec extends AnyFunSuite {
       .filter(_.isDirectory).map(_.getName).toSet
     assert(gens === Set("gen=g0", "gen=b0", "gen=b1"))
     // replay with the same checkpoint: nothing new, store unchanged
-    graft.streaming.VectorStream.annIngestAvailableNow(spark, src, dir)
+    graft.streaming.StoreStream.drainAvailableNow(spark, src, dir) {
+      (b, id) => graft.operators.VectorStore.annAppendOrReplay(spark, b,
+        "vec_id", "embedding", dir, s"b$id")
+    }
     assert(results() === got)
   }
 
